@@ -54,12 +54,10 @@ object Bench {
   /** Total task-cpu seconds of ONE fixed state-free shuffle burst:
     * `n` longs through a bare `repartition(64, id)` — serialize +
     * write + read per row, NOTHING whose footprint grows with burst
-    * length. The ONE copy of the workload whose fixedness is
-    * load-bearing twice over: the bench weather normalizer divides
-    * per-query cpu by it, and ScaleRehearsal's saturation probe
-    * compares its per-row cpu across burst lengths — if the shapes
-    * drifted apart the two instruments would silently stop measuring
-    * the same weather (review r19). */
+    * length. The ONE copy of the weather normalizer: Bench and the
+    * perfbench runner divide per-query cpu by it, so its shape must
+    * stay fixed — a changed workload would silently stop measuring
+    * the same weather and break comparisons with earlier records. */
   def stateFreeShuffleCpu(spark: SparkSession, n: Long): Double = {
     val lst = new TaskTimeListener
     org.apache.spark.graftshim.ListenerShim

@@ -2,10 +2,9 @@ package graft.func
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE copy of the SQL-conf save/set/try/restore idiom (r18 review:
-  * it had re-grown three hand copies across ScaleRehearsal, the
-  * star query, and the lake spec after the r17 consolidation —
-  * hoisted to shared main code this time so specs can use it too). */
+/** ONE copy of the SQL-conf save/set/try/restore idiom, in main code
+  * so the star query and the specs share it instead of each keeping
+  * a hand copy that can drift. */
 object Confs {
   /** Run `body` with SQL confs set, restoring priors afterwards.
     * getOption, not get: an optional conf with no default (e.g.

@@ -126,20 +126,7 @@ object Bpe {
   /** The learned merge table plus the final segmentation — shared
     * derivation for all four queries. Returns (merges in application
     * order, final vocab). */
-  private def learn(docs: DataFrame): (Seq[(String, Long)], DataFrame) =
-    learnWith(docs, MergeRounds, BatchCap, CandCap)
-
-  /** [[learn]] with explicit capacity knobs — the production-scale
-    * configuration path (a 32k-vocab run raises batchCap/candCap, not
-    * the loop count: rounds cost a full corpus pass each, batch width
-    * costs only driver-side dominance checks of candCap² pairs). The
-    * BOARD queries stay on the [[MergeRounds]]×[[BatchCap]] constants
-    * (the oracle CTE chain derives from the same values in lockstep);
-    * this entry exists for [[ScaleRehearsal]]'s ≥4k-merge rehearsal
-    * (VERDICT r10 task 6). */
-  private[llm] def learnWith(docs: DataFrame, mergeRounds: Int,
-                             batchCap: Int, candCap: Int)
-      : (Seq[(String, Long)], DataFrame) = {
+  private def learn(docs: DataFrame): (Seq[(String, Long)], DataFrame) = {
     var vocab = wordVocab(docs).withColumn("syms", initSyms)
       .matEagerly // bounded (distinct words); pins the loop input
     // the ReplacePasses fixpoint bound assumes ≤ 2·passes symbols per
@@ -153,15 +140,15 @@ object Bpe {
       s"$tooLong corpus words exceed ${2 * ReplacePasses - 1} chars — " +
         s"raise ReplacePasses in BOTH engines (Bpe.scala + oracle)")
     val all = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    (1 to mergeRounds).foreach { _ =>
+    (1 to MergeRounds).foreach { _ =>
       val top = pairCounts(vocab)
-        .orderBy(col("freq").desc, col("pair")).limit(candCap).collect()
+        .orderBy(col("freq").desc, col("pair")).limit(CandCap).collect()
         .map(r => Cand(r.getString(0), r.getLong(1))).toSeq
       // locally-dominant pairs, rank-capped — the oracle's d<k>/m<k>
       val batch = top
         .filter(c => !top.exists(q =>
           q.pair != c.pair && ranksBefore(q, c) && interacts(q, c)))
-        .take(batchCap)
+        .take(BatchCap)
       if (batch.nonEmpty) {
         val pats = batch.map(m => (s" ${m.pair} ", s" ${m.merged} "))
         // per pass: splice the leftmost occurrence of ANY batch

@@ -304,25 +304,18 @@ object Dedup {
     * once (lazy checkpoint) — the band self-join and both verify joins
     * re-read them instead of re-tokenizing the corpus per branch. */
   def lshDuplicates(spark: SparkSession, dir: String): DataFrame =
-    lshDuplicatesWith(spark, dir, Bands, R)
+    lshDuplicatesOf(Tables.documents(spark, dir), Bands, R)
 
-  /** [[lshDuplicates]] with an explicit bands×rows banding — the
-    * RECALL knob. The default [[Bands]]×[[R]] = 8×4 has band-hit
-    * probability 1−(1−J⁴)⁸ ≈ 0.990 at J = 0.81, which the round-10
-    * scale rehearsal measured as 97/100k docs (0.097%) losing every
-    * band cut on an adversarial chain corpus. When recall at the 0.8
-    * verify threshold matters, 16×2 over the same K = 32 signature
-    * raises the hit probability to 1−(1−J²)¹⁶ ≈ 1−3e-8 at the same
-    * verify cost per emitted candidate (more candidates, same exact
-    * Jaccard filter — precision is unchanged by construction). The
-    * board query stays on the default; the rehearsal re-runs the
-    * constructed-truth corpus at 16×2 and measures recall → 100%
-    * (PLANS.md §r11). */
-  def lshDuplicatesWith(spark: SparkSession, dir: String,
-                        bands: Int, rows: Int): DataFrame =
-    lshDuplicatesOf(Tables.documents(spark, dir), bands, rows)
-
-  /** [[lshDuplicatesWith]] over any (doc_id, text) frame. */
+  /** [[lshDuplicates]] over any (doc_id, text) frame with an explicit
+    * bands×rows banding — the RECALL knob. The default [[Bands]]×[[R]]
+    * = 8×4 has band-hit probability 1−(1−J⁴)⁸ ≈ 0.990 at J = 0.81, so
+    * on a 100k-doc adversarial chain corpus about 0.1% of docs lose
+    * every band cut. When recall at the 0.8 verify threshold matters,
+    * 16×2 over the same K = 32 signature raises the hit probability to
+    * 1−(1−J²)¹⁶ ≈ 1−3e-8 at the same verify cost per emitted candidate
+    * (more candidates, same exact Jaccard filter — precision is
+    * unchanged by construction). The board query stays on the default;
+    * DedupSpec holds both bandings to a constructed cluster truth. */
   def lshDuplicatesOf(docs: DataFrame,
                       bands: Int, rows: Int): DataFrame = {
     val shl = shingleSetsShared(docs)
@@ -349,8 +342,7 @@ object Dedup {
     * component level: members of an exact group share signatures
     * with their representative, so rep-level pairs + exact groups
     * reconstruct the same connected components and the same min-id
-    * keepers (asserted in DedupSpec and measured at 20k docs in
-    * ScaleRehearsal skewcorpus). Production rule: ALWAYS exact-dedup
+    * keepers (asserted in DedupSpec). Production rule: ALWAYS exact-dedup
     * before near-dup banding.
     *
     * NULL and empty texts are EXCLUDED from the collapse (and so from
@@ -701,9 +693,8 @@ object Dedup {
     ngramJaccardPrefixOf(Tables.documents(spark, dir))
 
   /** The prefix-posting frame (doc_id, sz, sh) behind
-    * [[ngramJaccardPrefixOf]], shared with the rehearsal's
-    * candidate-economy measurement. */
-  private[llm] def prefixPostings(shl: DataFrame): DataFrame = {
+    * [[ngramJaccardPrefixOf]]. */
+  private def prefixPostings(shl: DataFrame): DataFrame = {
     val t = JaccardPpmThreshold
     val post = shl.select(col("doc_id"),
       size(col("shingles")).cast("long").as("sz"),
@@ -865,9 +856,6 @@ object Dedup {
     } finally { edges.unpersist(); () }
   }
 
-  // r11: ScaleRehearsal now feeds driverClosure the SINGLE-direction
-  // pair list (union-find is direction-agnostic; half the collect
-  // heap), so this is Dedup-internal again
   private def undirectedEdges(pairs: DataFrame): DataFrame =
     pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -886,9 +874,7 @@ object Dedup {
     * vertex set is accumulated in ONE pass alongside the unions —
     * an earlier draft built a 2×|edges| boxed Seq and `.distinct`ed
     * it, hundreds of MB of avoidable garbage at the ceiling. */
-  // private[llm] so ScaleRehearsal can use it as the exact adjudicator
-  // against loopOnEdges (review r10) — not part of the public surface
-  private[llm] def driverClosure(edges: DataFrame): DataFrame = {
+  private def driverClosure(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val es = edges.as[(Long, Long)].collect()

@@ -69,7 +69,7 @@ object Similarity {
   val LloydIters = 3
   /** Near-dup cosine threshold, ppm.
     *
-    * 100 TB caveat (measured, r13 ladder — PLANS.md §r13(d)): iid
+    * 100 TB caveat (measured, PLANS.md §r13(d)): iid
     * noise cosines at [[Dim]] = 64 are ~N(0, 1/64), so 0.35 sits
     * only 2.8σ into the noise tail and VERIFIED chance pairs grow
     * ∝ n²·0.002 — at millions of vectors the keep-list closure
@@ -905,10 +905,10 @@ object Similarity {
     * the (plane, dim) index, reproducible in both engines because the
     * oracle bakes the evaluated weights in as SQL literals.
     *
-    * The r13 ladder caught the previous single-multiply Weyl mix
-    * producing near-identical and ANTIPODAL plane pairs (plane 49
-    * equalled plane 0 exactly; the default 32-plane family had
-    * in-band antipodal pairs). An antipodal plane's sign bit is the
+    * A corpus-growth measurement (PLANS.md §r13) caught the previous
+    * single-multiply Weyl mix producing near-identical and ANTIPODAL
+    * plane pairs (plane 49 equalled plane 0 exactly; the default
+    * 32-plane family had in-band antipodal pairs). An antipodal plane's sign bit is the
     * complement of its twin's — agreement between two vectors on one
     * is the SAME EVENT as agreement on the other — so each such pair
     * costs its band one effective bit and doubles chance-candidate
@@ -988,30 +988,25 @@ object Similarity {
     * exact cosine ≥ 0.35. Bands bucket the join; recall (vs the exact
     * all-pairs answer) is probabilistic and asserted in tests. */
   def lshNearDup(spark: SparkSession, dir: String): DataFrame =
-    lshNearDupWith(spark, dir, BandsCount, BitsPerBand)
-
-  /** [[lshNearDup]] with an explicit bands×bits banding — the
-    * CANDIDATE-VOLUME knob. Per band, two vectors collide with
-    * probability ~2^-bits on an unclustered corpus, so expected
-    * chance candidates are bands·n²/2^(bits+1): at FIXED bits that
-    * term is quadratic in corpus size (confirmed by the r13 ladder —
-    * see PLANS.md §r13). Growing bits with the corpus —
-    * bits ≈ log2(n / targetBucket) — holds expected bucket
-    * occupancy constant and restores ~linear growth, trading per-band
-    * recall (p^bits for bit-agreement probability p = 1−θ/π), which
-    * stays ≈1 for the cos ≥ 0.9 near-dup regime even at 8 bits. The
-    * board query stays on 8×4 (oracle lockstep); production picks
-    * bits from the corpus cardinality. */
-  def lshNearDupWith(spark: SparkSession, dir: String,
-                     bands: Int, bits: Int): DataFrame =
-    lshNearDupAt(spark, dir, bands, bits, NearDupPpm)
+    lshNearDupAt(spark, dir, BandsCount, BitsPerBand, NearDupPpm)
 
   /** [[lshNearDupProd]]: the production-threshold sibling — identical
     * candidate generation, cosine verify at [[NearDupProdPpm]]. */
   def lshNearDupProd(spark: SparkSession, dir: String): DataFrame =
     lshNearDupAt(spark, dir, BandsCount, BitsPerBand, NearDupProdPpm)
 
-  /** [[lshNearDupWith]] with the VERIFY-THRESHOLD knob exposed too. */
+  /** [[lshNearDup]] with an explicit bands×bits banding and verify
+    * threshold. Bits is the CANDIDATE-VOLUME knob. Per band, two
+    * vectors collide with probability ~2^-bits on an unclustered
+    * corpus, so expected chance candidates are bands·n²/2^(bits+1):
+    * at FIXED bits that term is quadratic in corpus size (measured,
+    * PLANS.md §r13). Growing bits with the corpus —
+    * bits ≈ log2(n / targetBucket), [[scaleBits]] — holds expected
+    * bucket occupancy constant and restores ~linear growth, trading
+    * per-band recall (p^bits for bit-agreement probability
+    * p = 1−θ/π), which stays ≈1 for the cos ≥ 0.9 near-dup regime even
+    * at 8 bits. The board query stays on 8×4 (oracle lockstep);
+    * production picks bits from the corpus cardinality. */
   def lshNearDupAt(spark: SparkSession, dir: String,
                    bands: Int, bits: Int, thresholdPpm: Long): DataFrame = {
     // bits ≤ 31 keeps the band mask inside Int; anything wider is
@@ -1322,7 +1317,7 @@ object Similarity {
     embedKeepListWith(spark, dir, BandsCount, BitsPerBand)
 
   /** [[embedKeepList]] with the banding knob exposed — the scale path
-    * picks bits from corpus cardinality (see [[lshNearDupWith]]). */
+    * picks bits from corpus cardinality (see [[lshNearDupAt]]). */
   def embedKeepListWith(spark: SparkSession, dir: String,
                         bands: Int, bits: Int): DataFrame =
     embedKeepListAt(spark, dir, bands, bits, NearDupPpm)

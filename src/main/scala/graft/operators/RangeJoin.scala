@@ -781,19 +781,17 @@ object RangeJoin {
 
   /** The overlap audit at the CENSUS-DERIVED mitigation —
     * [[autoOverlapMitigation]] run end to end on real data, then the
-    * same join at the FULL (width, salt) it picks (r19-VERDICT task
-    * 5: the auto API's value path was exercised only by spec +
-    * rehearsal; this puts it under the driver's cross-engine hash).
+    * same join at the FULL (width, salt) it picks, so the auto API's
+    * value path sits under the cross-engine oracle hash.
     * Same oracle as [[bandOverlapQuery]]: the operator's contract is
     * width- AND salt-independence, so the hash compare IS the proof
     * that the derived mitigation changes nothing but the plan's
     * balance. (At the sf corpora the price bands are benign —
     * near-uniform occupancy — so auto returns (probeWidth, 1) and
     * the salted operator IS [[intervalOverlap]]: the leg proves the
-    * auto path adds nothing on healthy data; the skewed regimes are
-    * rehearsed on hot-bucket corpora in ScaleRehearsal's rangeladder
-    * and overlapsalt sections, where auto BEAT the hand-tuned width
-    * 3.4 s vs 7.4 s wall and derived the salt the crowd needed.) */
+    * auto path adds nothing on healthy data; RangeJoinSpec holds the
+    * skewed regimes — a crowded bucket re-keys to the crowd's span,
+    * a same-range crowd salts — and their salt invariance.) */
   def bandOverlapAutoQuery(spark: SparkSession, dir: String): DataFrame = {
     val (a, b) = (priceBands(spark, dir, "pk_a", "lo_a", "hi_a"),
       priceBands(spark, dir, "pk_b", "lo_b", "hi_b"))

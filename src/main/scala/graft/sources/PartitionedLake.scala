@@ -236,9 +236,9 @@ object PartitionedLake {
     *     columns pruned from ReadSchema.
     *
     * All three are asserted on the SAME executed scan in
-    * PartitionedLakeSpec; each device is proven separately by
-    * [[dppQuery]], the bloom rehearsal, and [[pruneQuery]] — this
-    * query proves they COMPOSE. */
+    * PartitionedLakeSpec; DPP and predicate pushdown are proven
+    * separately by [[dppQuery]] and [[pruneQuery]] — this query
+    * proves the three COMPOSE. */
   private[graft] def starFrame(spark: SparkSession, dir: String,
       format: String): DataFrame = {
     val schema = eventsWithDt(spark, dir).schema

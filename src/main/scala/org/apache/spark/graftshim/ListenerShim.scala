@@ -2,12 +2,12 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** Bridge to the `private[spark]` listener bus drain. Task-end events
+/** Bridge to the `private[spark]` listener bus. Task-end events
   * are delivered asynchronously; a benchmark that diffs listener-side
   * counters around a blocking action must drain the bus first or the
   * tail of one query's tasks is attributed to the next. This shim
   * lives inside the `org.apache.spark` package solely to re-export
-  * that one call for graft's Bench instrumentation. */
+  * the bus calls graft's instrumentation and specs need. */
 object ListenerShim {
   /** Block until every queued listener event has been delivered
     * (bounded by the bus's internal timeout; a timeout is surfaced,
@@ -17,8 +17,8 @@ object ListenerShim {
 
   /** Number of listeners currently registered on the shared
     * LiveListenerBus — the accumulation observable for the
-    * per-query-session idiom (ScaleRehearsal `scopedsession`): if
-    * minting a scoped session registered anything on the SHARED bus,
-    * 10k mints would show here (and retain their SessionStates). */
+    * per-query-session idiom ([[graft.func.Confs.scopedSession]]): a
+    * mint that registered anything on the SHARED bus would grow this
+    * with every query and retain its SessionState forever. */
   def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size()
 }

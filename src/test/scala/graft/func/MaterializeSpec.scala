@@ -23,22 +23,34 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("reliable mode routes through checkpoint() to the checkpoint dir") {
+    val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft_mat_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    val ss = Confs.scopedSession(spark,
-      Seq(Materialize.ModeConf -> "reliable"))
-    val lazyOut = Materialize.lazily(ss.range(50).toDF("id"))
-    assert(lazyOut.count() === 50)
-    val eagerOut = Materialize.eagerly(ss.range(7).toDF("id"))
-    assert(eagerOut.count() === 7)
-    // both materializations must have landed files under the
-    // fault-tolerant checkpoint dir (the local mode writes none)
-    def files(p: java.io.File): Seq[java.io.File] = {
-      val kids = Option(p.listFiles()).map(_.toSeq).getOrElse(Nil)
-      kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(files)
+    // the session is shared across suites: put the previous checkpoint
+    // dir back (setCheckpointDir cannot, it mints a fresh subdir) and
+    // delete this test's dir, so nothing later writes into a leaked path
+    val prior = sc.getCheckpointDir
+    try {
+      sc.setCheckpointDir(dir.toString)
+      val ss = Confs.scopedSession(spark,
+        Seq(Materialize.ModeConf -> "reliable"))
+      val lazyOut = Materialize.lazily(ss.range(50).toDF("id"))
+      assert(lazyOut.count() === 50)
+      val eagerOut = Materialize.eagerly(ss.range(7).toDF("id"))
+      assert(eagerOut.count() === 7)
+      // both materializations must have landed files under the
+      // fault-tolerant checkpoint dir (the local mode writes none)
+      def files(p: java.io.File): Seq[java.io.File] = {
+        val kids = Option(p.listFiles()).map(_.toSeq).getOrElse(Nil)
+        kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(files)
+      }
+      assert(files(dir.toFile).nonEmpty,
+        "reliable mode must write to the checkpoint dir")
+    } finally {
+      org.apache.spark.graftshim.CheckpointDirShim.restore(sc, prior)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-    assert(files(dir.toFile).nonEmpty,
-      "reliable mode must write to the checkpoint dir")
+    assert(sc.getCheckpointDir === prior)
+    assert(!dir.toFile.exists())
   }
 
   test("an unknown mode fails loudly, naming the conf") {
@@ -53,8 +65,7 @@ class MaterializeSpec extends SparkSpec {
   test("every query-path materialization site routes through the helper") {
     // the policy is only a policy if no site bypasses it: grep the
     // main source tree for direct localCheckpoint calls outside the
-    // helper itself and the rehearsal harness (ScaleRehearsal drives
-    // measurement loops, not query paths)
+    // helper itself
     val root = new java.io.File("src/main/scala/graft")
     assume(root.isDirectory, "source tree not visible from test cwd")
     def scalas(d: java.io.File): Seq[java.io.File] = {
@@ -63,8 +74,7 @@ class MaterializeSpec extends SparkSpec {
         kids.filter(_.isDirectory).flatMap(scalas)
     }
     val offenders = scalas(root)
-      .filterNot(f => Set("Materialize.scala", "ScaleRehearsal.scala")
-        .contains(f.getName))
+      .filterNot(_.getName == "Materialize.scala")
       .filter { f =>
         val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
           "UTF-8")

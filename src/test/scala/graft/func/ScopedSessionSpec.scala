@@ -44,6 +44,27 @@ class ScopedSessionSpec extends SparkSpec {
       "scoped injection leaked into the parent session")
   }
 
+  test("minting scoped sessions registers nothing on the shared " +
+      "listener bus") {
+    // a mint that subscribed anything to the SHARED bus would grow the
+    // listener count per query and pin every cloned SessionState; some
+    // mints run a real action so used sessions are covered too
+    import org.apache.spark.graftshim.ListenerShim
+    val sc = spark.sparkContext
+    ListenerShim.drainListenerBus(sc)
+    val before = ListenerShim.listenerCount(sc)
+    for (i <- 0 until 200) {
+      val s = Confs.scopedSession(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+      if (i % 50 == 0) {
+        assert(s.conf.get("spark.sql.autoBroadcastJoinThreshold") === "-1")
+        assert(s.range(2).count() === 2L)
+      }
+    }
+    ListenerShim.drainListenerBus(sc)
+    assert(ListenerShim.listenerCount(sc) === before)
+  }
+
   test("the native as-of plans inside a scoped session and leaves the " +
       "parent's hooks exactly as they were") {
     val priorStrategies = spark.experimental.extraStrategies

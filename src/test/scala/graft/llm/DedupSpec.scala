@@ -206,6 +206,32 @@ class DedupSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
+  test("LSH banding recall: 8x4 and 16x2 put every constructed cluster " +
+      "and chain on its component minimum") {
+    // near-dup clusters (60 shared tokens + one unique: J ≈ 0.97) and
+    // sliding-window chains (80 tokens, stride 4: neighbours J ≈ 0.90,
+    // one apart J ≈ 0.81) — every doc has a verified edge inside its
+    // group, so banding + closure must rebuild the constructed truth
+    val clusters = for (k <- 0L until 12L; j <- 0L until 6L) yield {
+      val base = (0 until 60).map(t => s"k${k}b$t").mkString(" ")
+      (k * 1000L + j, s"$base k${k}u$j", k * 1000L)
+    }
+    val chains = for (c <- 0L until 3L; j <- 0 until 20) yield {
+      val toks = (4 * j until 4 * j + 80).map(t => s"c${c}w$t")
+      val id0 = 10000000L + c * 1000L
+      (id0 + j, toks.mkString(" "), id0)
+    }
+    val corpus = clusters ++ chains
+    val d = docs(corpus.map { case (id, text, _) => (id, text) }: _*)
+    val truth = corpus.map { case (id, _, keeper) => id -> keeper }.toMap
+    for ((bands, rows) <- Seq((Dedup.Bands, Dedup.R), (16, 2))) {
+      val keepers = Dedup.closureKeepers(
+          Dedup.lshDuplicatesOf(d, bands, rows).select("doc_a", "doc_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(keepers === truth, s"${bands}x$rows banding lost recall")
+    }
+  }
+
   test("ngram jaccard: inverted index finds the near-dup, prunes the rest") {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 40).map(i => if (i == 37) "CHANGED" else s"tok$i")

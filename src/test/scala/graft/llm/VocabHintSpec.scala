@@ -90,9 +90,8 @@ class VocabHintSpec extends SparkSpec {
   // ppm domain (≤ |langs|×1e6 rows) regardless of corpus size — the
   // one hint class that IS bounded by construction. These specs pin
   // that the offsets frame is the ONLY hinted frame in each plan
-  // (rehearsal-measured at the 10M-token / 50k-doc corpus: 5,486
-  // rows ≈ 0.23 MB for pplFilter; 167 rows for curriculum —
-  // PLANS.md §r11).
+  // (measured at a 10M-token / 50k-doc corpus: 5,486 rows ≈ 0.23 MB
+  // for pplFilter; 167 rows for curriculum — PLANS.md §r11).
 
   test("pplFilter: only the (lang, score)-grid offsets frame is hinted") {
     assertNoVocabHint(LangModel.pplFilter(spark, Sf),

@@ -94,7 +94,7 @@ class SinksSpec extends SparkSpec {
     Sinks.writeBucketed(l, Seq("l_orderkey"), 8, "b_lineitem")
     // capture priors so the finally RESTORES rather than clobbers a
     // session that deliberately ran with other values (r17-ADVICE;
-    // same getOption discipline as ScaleRehearsal.withSqlConfs)
+    // same getOption discipline as Confs.withSqlConfs)
     val priorBroadcast =
       spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     val priorSortedScan = spark.conf.getOption(

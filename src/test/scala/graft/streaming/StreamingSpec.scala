@@ -143,6 +143,68 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("stream-stream interval join state stays bounded by the window " +
+      "plus delay, then falls to the sentinel residue") {
+    // J2's back-looking shape (a payment follows its order by at most
+    // the window): orders at 2 Hz, each payment `off` < window later,
+    // each side fed in its own event-time order. Join state is the
+    // watermark horizon — orders buffer window + delay, payments the
+    // delay — so it must plateau while events keep flowing, never
+    // grow with the total ingested
+    implicit val sc = spark.sqlContext
+    val (n, nBatches, stepMs) = (1600, 8, 500L)
+    val (windowS, delayS) = (30L, 10L)
+    val base = t("2021-03-21 10:00:00").getTime
+    val orders = (0 until n).map(i =>
+      Ord(i, new Timestamp(base + i * stepMs), i.toLong))
+    val payments = (0 until n).map { i =>
+      val off = (i % 50) * stepMs // < window: every payment joins
+      Det(i, new Timestamp(base + i * stepMs + off), i.toLong)
+    }.sortBy(_.d_ts.getTime)
+    val per = n / nBatches
+    val pSrc = MemoryStream[Det]
+    val oSrc = MemoryStream[Ord]
+    def join(p: org.apache.spark.sql.DataFrame,
+             o: org.apache.spark.sql.DataFrame) =
+      StreamJobs.intervalJoinBounds(p, o, "d_order_id", "order_id",
+          "d_ts", "o_ts", lo = s"$windowS seconds", hi = "0 seconds",
+          delay = s"$delayS seconds")
+        .select(col("order_id"), col("amount"))
+    val q = join(pSrc.toDF(), oSrc.toDF())
+      .writeStream.format("memory").queryName("ivj_bounded")
+      .outputMode("append").start()
+    def stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    val states = (0 until nBatches).map { b =>
+      pSrc.addData(payments.slice(b * per, (b + 1) * per): _*)
+      oSrc.addData(orders.slice(b * per, (b + 1) * per): _*)
+      q.processAllAvailable()
+      stateRows
+    }
+    // far-future sentinels on disjoint keys close both watermarks
+    val far = t("2021-04-01 00:00:00")
+    pSrc.addData(Det(-1, far, -1L))
+    oSrc.addData(Ord(-2, far, -2L))
+    q.processAllAvailable()
+    val finalState = stateRows
+    q.stop()
+    // one batch plus the horizon, per side — independent of n
+    val horizonRows = 2 * (per + (windowS + delayS) * 1000 / stepMs)
+    assert(states.max <= horizonRows,
+      s"join state grew past the watermark horizon ($horizonRows rows): " +
+        states.mkString(", "))
+    // each batch spans 100 s > window + delay, so the second batch is
+    // already past the horizon: from there on, flat
+    assert(states.drop(1).max <= states(1) * 13 / 10,
+      s"join state kept growing with events: ${states.mkString(", ")}")
+    assert(finalState <= 2,
+      s"sentinel flush left $finalState buffered rows besides the sentinels")
+    val streamed = spark.table("ivj_bounded").filter(col("order_id") >= 0)
+      .as[(Long, Long)].collect()
+    assert(streamed.length === n)
+    assert(streamed.toSet === join(payments.toDF(), orders.toDF())
+      .as[(Long, Long)].collect().toSet)
+  }
+
   test("streaming as-of join matches the batch composition, state-final") {
     implicit val sc = spark.sqlContext
     val rights = Seq(
@@ -615,6 +677,49 @@ class StreamingSpec extends SparkSpec {
     // the crowd really pairs all-to-all (the shape under test)
     assert(got.count { case (l, r) => l >= 500 && l < 525 &&
       r >= 1500 && r < 1525 } === 625)
+  }
+
+  test("stream-stream interval overlap SALTED: the crowd's state spreads " +
+      "from one key to one per grid cell") {
+    // a pure same-range crowd sits in ONE state key unsalted; the 1-D
+    // (16, 1) split and the 2-D (4, 4) grid must each spread it over
+    // exactly 16 cells. The delay outlasts the feed, so nothing prunes
+    // and the key counts read the full buffered placement
+    implicit val sc = spark.sqlContext
+    val c = 40
+    val lo = t("2021-03-21 10:00:00").getTime + 96 // bucket-aligned at 32 ms
+    def crowd(idBase: Long) = (0 until c).map(i =>
+      (idBase + i, new Timestamp(lo), new Timestamp(lo + 16)))
+    val (ls, rs) = (crowd(0L), crowd(1000L))
+    def run(saltLeft: Int, saltRight: Int): (Long, Set[(Long, Long)]) = {
+      val lSrc = MemoryStream[OvL]
+      val rSrc = MemoryStream[OvR]
+      val name = s"ovs_cells_${saltLeft}_$saltRight"
+      val q = StreamJobs.intervalOverlapStream(lSrc.toDF(), rSrc.toDF(),
+          "ol_id", "ol_lo", "ol_hi", "or_id", "or_lo", "or_hi",
+          bucketWidthMs = 32L, maxSpanMs = 16L, delay = "1 hour",
+          saltLeft = saltLeft, saltRight = saltRight)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      // two batches: later lefts meet buffered rights inside their cell
+      for (b <- 0 until 2) {
+        lSrc.addData(ls.slice(b * c / 2, (b + 1) * c / 2)
+          .map { case (i, a, z) => OvL(i, a, z) }: _*)
+        rSrc.addData(rs.slice(b * c / 2, (b + 1) * c / 2)
+          .map { case (i, a, z) => OvR(i, a, z) }: _*)
+        q.processAllAvailable()
+      }
+      val keys = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      q.stop()
+      (keys, spark.table(name).as[(Long, Long)].collect().toSet)
+    }
+    val (k0, p0) = run(1, 1)
+    val (k1, p1) = run(16, 1)
+    val (k2, p2) = run(4, 4)
+    assert((k0, k1, k2) === ((1L, 16L, 16L)),
+      "crowd placement must read 1 -> 16 -> 16 state keys")
+    assert(p0.size === c * c)
+    assert(p1 === p0 && p2 === p0, "salt placement changed the answer")
   }
 
   test("stream-stream interval overlap: an over-span row fails loudly") {
